@@ -1650,9 +1650,7 @@ def io_kml_roundtrip(spark, sf):
                         f"arctic_kml_rt_{os.getpid()}.kml")
     aio.write_kml(gdf, path, name_column="n_name")
     back = aio.read_kml(spark, path)
-    from arctic_spark.functions.native import memo_col
-    ctr = memo_col(("io_gate_centroid", "geometry"),
-                   lambda: st.centroid(F.col("geometry")))
+    ctr = st.centroid(F.col("geometry"))
     return (back.df.select(
         F.col("name").alias("n_name"),
         F.col("nk").cast("long").alias("n_nationkey"),
@@ -1686,9 +1684,7 @@ def io_ipc_roundtrip(spark, sf):
     aio.write_ipc(gdf, path)
     back = aio.read_ipc(spark, path)
     assert back.crs == "EPSG:4326"
-    from arctic_spark.functions.native import memo_col
-    ctr = memo_col(("io_gate_centroid", "geometry"),
-                   lambda: st.centroid(F.col("geometry")))
+    ctr = st.centroid(F.col("geometry"))
     return (back.df.select(
         F.col("n_nationkey").cast("long").alias("n_nationkey"),
         "n_name",
@@ -1721,15 +1717,7 @@ def io_gpkg_roundtrip(spark, sf):
                         f"arctic_gpkg_rt_{os.getpid()}.gpkg")
     aio.write_geopackage(gdf, path, layer="nations")
     back = aio.read_geopackage(spark, path)
-    # build the centroid expression tree ONCE PER SESSION (py4j
-    # construction is ~0.9 s per build at this tree size; two builds
-    # per pass dominated the gate's wall time — r9 profile). pyspark
-    # Columns are immutable and reusable across DataFrames, so the
-    # memoized tree serves all three io round-trip gates and every
-    # bench pass
-    from arctic_spark.functions.native import memo_col
-    ctr = memo_col(("io_gate_centroid", "geometry"),
-                   lambda: st.centroid(F.col("geometry")))
+    ctr = st.centroid(F.col("geometry"))
     return (back.df.select(
         "n_nationkey", "n_name",
         F.round(st.area("geometry"), 6).alias("area"),
@@ -1763,15 +1751,7 @@ def io_fgb_roundtrip(spark, sf):
                         f"arctic_fgb_rt_{os.getpid()}.fgb")
     aio.write_flatgeobuf(gdf, path, name="nations")
     back = aio.read_flatgeobuf(spark, path)
-    # build the centroid expression tree ONCE PER SESSION (py4j
-    # construction is ~0.9 s per build at this tree size; two builds
-    # per pass dominated the gate's wall time — r9 profile). pyspark
-    # Columns are immutable and reusable across DataFrames, so the
-    # memoized tree serves all three io round-trip gates and every
-    # bench pass
-    from arctic_spark.functions.native import memo_col
-    ctr = memo_col(("io_gate_centroid", "geometry"),
-                   lambda: st.centroid(F.col("geometry")))
+    ctr = st.centroid(F.col("geometry"))
     return (back.df.select(
         "n_nationkey", "n_name",
         F.round(st.area("geometry"), 6).alias("area"),
@@ -1811,9 +1791,7 @@ def io_multifile_union(spark, sf):
                              layer="nations")
     back = aio.read_files(spark, d)
     assert back.df.rdd.getNumPartitions() <= 4
-    from arctic_spark.functions.native import memo_col
-    ctr = memo_col(("io_gate_centroid", "geometry"),
-                   lambda: st.centroid(F.col("geometry")))
+    ctr = st.centroid(F.col("geometry"))
     return (back.df.select(
         "n_nationkey", "n_name",
         F.round(st.area("geometry"), 6).alias("area"),

@@ -47,7 +47,8 @@ _MEMO_CTX = None      # strong ref to the SparkContext the memo belongs to
 
 
 def memo_col(key, builder) -> Column:
-    """Memoize a constructed Column on (live SparkContext, key).
+    """Memoize a constructed Column (or a JVM lambda template, see
+    ``let_once``) on (live SparkContext, key).
 
     Building a big expression tree is py4j gateway chatter — hundreds
     to thousands of round-trips (a contains_point tree ~700, an 8×64
@@ -85,6 +86,54 @@ def _let(col: Column, fn) -> Column:
     return F.element_at(F.transform(F.array(col), fn), 1)
 
 
+def _literal_key(v):
+    """Hashable, type-tagged key for a literal argument. ``1``, ``1.0``
+    and ``True`` build different Spark literals (int, double, boolean),
+    so the type is part of the key; floats key on ``repr`` so -0.0
+    stays apart from 0.0. Anything else (a Column, a dict, a numpy
+    scalar) raises TypeError."""
+    t = type(v)
+    if t is float:
+        return t, repr(v)
+    if t in (type(None), bool, int, str):
+        return t, v
+    if t in (tuple, list):
+        return t, tuple(_literal_key(e) for e in v)
+    raise TypeError(t.__name__)
+
+
+def let_once(col, body, owner, *literals) -> Column:
+    """``_let(col, body)`` with the lambda ``x -> body(x)`` built once per
+    SparkContext, in the ``memo_col`` memo, under the key ``owner`` (the
+    function that makes the body) plus ``literals`` (the arguments the
+    body was made from).
+    Building a geometry body costs hundreds to thousands of py4j round
+    trips (``st.centroid`` ~6k); binding a cached lambda to a new input
+    costs about twenty. The body must depend on nothing but its lambda
+    variable and the key; when a literal is not one (a Column, a dict),
+    the lambda is built fresh and not cached.
+
+    PySpark has no public call that applies a prebuilt lambda, so this
+    is the one place that uses its internals: ``_create_lambda`` turns
+    the body into a JVM ``LambdaFunction`` and ``PythonSQLUtils.fn``
+    applies ``transform`` to it, exactly as ``F.transform`` does. Each
+    lambda variable gets a fresh JVM-side name, and each occurrence of
+    a shared lambda in a plan resolves on its own, so one template can
+    serve several inputs of one projection, nested or side by side."""
+    from pyspark import SparkContext
+    from pyspark.sql.classic.column import _to_java_column, _to_seq
+    from pyspark.sql.functions.builtin import _create_lambda
+    try:
+        key = (owner,) + tuple(_literal_key(v) for v in literals)
+    except TypeError:
+        lam = _create_lambda(body)
+    else:
+        lam = memo_col(key, lambda: _create_lambda(body))
+    sc = SparkContext._active_spark_context
+    arr = _to_java_column(F.array(col))
+    return F.element_at(Column(sc._jvm.PythonSQLUtils.fn(
+        "transform", _to_seq(sc, [arr, lam]))), 1)
+
 
 def freeze(col) -> Column:
     """Optimizer-opaque identity: evaluate an EXPRESSION-BUILT geometry
@@ -107,12 +156,15 @@ def freeze(col) -> Column:
 def _geom_fn(fn):
     """Decorator: bind the geometry argument once (see _let) before the
     body references it — keeps composed expressions like
-    st.area(st.envelope(g)) linear in input size."""
+    st.area(st.envelope(g)) linear in input size. The body is a
+    ``let_once`` template keyed on (fn, literal arguments), so it is
+    built once per session; a Column argument builds it fresh."""
     import functools
 
     @functools.wraps(fn)
     def wrapper(g, *args, **kwargs):
-        return _let(_g(g), lambda gg: fn(gg, *args, **kwargs))
+        return let_once(_g(g), lambda gg: fn(gg, *args, **kwargs),
+                        fn, args, tuple(sorted(kwargs.items())))
     return wrapper
 
 
@@ -209,23 +261,6 @@ def _signed_area_span(g, o, n):
     return acc
 
 
-def _area_core(g) -> Column:
-    """Polygon-family area machinery (no GC branch — see ``area``)."""
-    co = _offsets(g["rings"])
-    ext = _exterior_ring_ids(g)
-    terms = F.transform(
-        _ring_ids(g),
-        lambda i: _let(
-            F.abs(_ring_signed_area(g, co, i)),
-            lambda ar: F.when(F.array_contains(ext, i), ar)
-                        .otherwise(-ar)))
-    single = F.abs(_signed_area_span(g, F.lit(0), F.size(g["xs"])))
-    return F.when(
-        g["gt"].isin(POLYGON, MULTIPOLYGON),
-        F.when(F.size(g["rings"]) == 1, single).otherwise(_fsum(terms))) \
-        .otherwise(F.lit(0.0))
-
-
 @_geom_fn
 def area(g) -> Column:
     """Planar area (exterior rings +, holes −, orientation-insensitive).
@@ -283,25 +318,6 @@ def _length_span(g, o, n):
                      (F.element_at(g["ys"], i + 1)
                       - F.element_at(g["ys"], i)).alias("dy")),
             lambda d: F.sqrt(d["dx"] * d["dx"] + d["dy"] * d["dy"])))
-
-
-def _length_core(g) -> Column:
-    """Line/polygon length machinery (no GC branch — see ``length``)."""
-    co = _offsets(g["rings"])
-    ext = _exterior_ring_ids(g)
-    all_rings = _fsum(F.transform(_ring_ids(g),
-                                  lambda i: _ring_length(g, co, i)))
-    ext_rings = _fsum(F.transform(
-        _ring_ids(g),
-        lambda i: F.when(F.array_contains(ext, i), _ring_length(g, co, i))
-                   .otherwise(F.lit(0.0))))
-    single = _length_span(g, F.lit(0), F.size(g["xs"]))
-    one_ring = F.size(g["rings"]) == 1
-    return (F.when(g["gt"].isin(LINESTRING, MULTILINESTRING),
-                   F.when(one_ring, single).otherwise(all_rings))
-             .when(g["gt"].isin(POLYGON, MULTIPOLYGON),
-                   F.when(one_ring, single).otherwise(ext_rings))
-             .otherwise(F.lit(0.0)))
 
 
 @_geom_fn

@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf, pandas_udf
 
 from ..geom import algos, batch, boolean, geojson, wkb, wkt
-from ..geom.ragged import MISSING, RaggedGeometry
+from ..geom.ragged import MISSING, RaggedGeometry, int32_offsets
 from ..sparktypes import GEOM_TYPE, GEOM_TYPE_Z
 
 
@@ -89,7 +89,7 @@ def ragged_to_arrow(rg: RaggedGeometry) -> pa.StructArray:
 
     def list_arr(vals, offsets, patype):
         return pa.ListArray.from_arrays(
-            pa.array(offsets.astype(np.int32), pa.int32()),
+            pa.array(int32_offsets(offsets), pa.int32()),
             pa.array(np.ascontiguousarray(vals), patype), mask=mask)
 
     gt = pa.array(rg.gt.astype(np.int32), pa.int32(),

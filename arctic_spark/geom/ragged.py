@@ -53,6 +53,18 @@ TYPE_NAMES = {
 }
 
 
+def int32_offsets(offsets) -> np.ndarray:
+    """Monotone int64 ``offsets`` as the int32 offsets of an Arrow
+    ``list`` array. A batch with 2**31 or more elements would wrap into
+    corrupt geometry, so it raises instead."""
+    if len(offsets) and offsets[-1] >= 2**31:
+        raise OverflowError(
+            f"{int(offsets[-1])} list elements in one Arrow batch exceed "
+            "int32 list offsets (limit 2**31 - 1); lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch")
+    return offsets.astype(np.int32)
+
+
 class RaggedGeometry:
     """A batch of geometries in ragged columnar form."""
 

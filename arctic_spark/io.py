@@ -1315,12 +1315,13 @@ def _ragged_to_arrow_struct(rg):
     import numpy as np
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_type
+    from .geom.ragged import int32_offsets
     from .sparktypes import GEOM_TYPE
     pa_type = to_arrow_type(GEOM_TYPE)
 
     def lst(offsets, values, vt):
         return pa.ListArray.from_arrays(
-            pa.array(offsets.astype(np.int32), type=pa.int32()),
+            pa.array(int32_offsets(offsets), type=pa.int32()),
             pa.array(values, type=vt))
 
     gt = pa.array(rg.gt.astype(np.int32), type=pa.int32())

@@ -724,7 +724,8 @@ def dsir_log_weights(raw_df: DataFrame, target_df: DataFrame,
     per-doc bucket counts shuffle on (id, bucket) with map-side
     partials, then one shuffle on the id folds the weight. Documents
     with no features (empty after tokenization) have no weight and
-    cannot be selected."""
+    cannot be selected. The persisted per-doc count table is pinned on
+    the result; ``cache.release(result)`` frees it."""
     from pyspark import StorageLevel
     feats = dsir_features(text_col, buckets)
     # r13: ONE tokenize+explode pass over the raw corpus. The raw
@@ -767,14 +768,18 @@ def dsir_select(raw_df: DataFrame, target_df: DataFrame, k: int,
     seed, so an oracle replays the exact selected set; ranking
     quantizes the key to 9 decimals with an id tie-break so a
     cross-engine log() ulp cannot reorder the cut. Returns (id,
-    n_feat, logw, key), the selected k."""
+    n_feat, logw, key), the selected k. The persisted per-doc count
+    table stays pinned on the result: ``cache.release(result)`` frees
+    it once the selection has been consumed."""
     w = dsir_log_weights(raw_df, target_df, id_col, text_col, buckets)
     h = F.conv(F.substring(
         F.md5(F.concat(F.col("id").cast("string"), F.lit(seed))),
         1, 8), 16, 10).cast("double")
     u = (h + F.lit(0.5)) / F.lit(4294967296.0)
     key = F.col("logw") + (-F.log(-F.log(u)))
-    return (w.withColumn("key", key)
-            .orderBy(F.round(F.col("key"), 9).desc(),
-                     F.col("id").asc())
-            .limit(int(k)))
+    from ..cache import pin, pinned
+    out = (w.withColumn("key", key)
+           .orderBy(F.round(F.col("key"), 9).desc(),
+                    F.col("id").asc())
+           .limit(int(k)))
+    return pin(out, *pinned(w))

@@ -5,8 +5,8 @@ one transformer per column, then a per-geometry decode→transform→reencode
 loop) and accepts ANY pair of CRS. This container has no PROJ/pyproj, so
 the engine implements the projection math directly as closed-form Spark
 SQL expressions over the GEOM struct's coordinate arrays — the transform
-runs JVM-side inside whole-stage codegen, per-coordinate, with no Python
-worker at all.
+runs JVM-side, per-coordinate, with no Python worker at all (interpreted:
+array higher-order functions are CodegenFallback).
 
 Any-to-any routing goes through the WGS84 lon/lat hub (matching
 ops/proj.rs:33-70's transformer semantics):
@@ -50,7 +50,7 @@ import math
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from .functions.native import _g, _valid, geom_struct
+from .functions.native import _g, _valid, geom_struct, let_once
 
 # ---------------------------------------------------------------------------
 # ellipsoids (public EPSG ellipsoid parameters: semi-major, inverse flat)
@@ -1963,13 +1963,16 @@ def transform_geom(g, from_crs, to_crs) -> Column:
     if (fk, fp) == (tk, tp):
         return g
 
-    pts = F.zip_with(g["xs"], g["ys"],
-                     lambda px, py: _ll_transform(fk, fp, tk, tp, px, py))
+    def body(gg):
+        pts = F.zip_with(gg["xs"], gg["ys"],
+                         lambda px, py: _ll_transform(fk, fp, tk, tp, px, py))
 
-    def with_pts(p):
-        return geom_struct(g["gt"],
-                           F.transform(p, lambda q: q["x"]),
-                           F.transform(p, lambda q: q["y"]),
-                           g["rings"], g["parts"])
+        def with_pts(p):
+            return geom_struct(gg["gt"],
+                               F.transform(p, lambda q: q["x"]),
+                               F.transform(p, lambda q: q["y"]),
+                               gg["rings"], gg["parts"])
 
-    return F.when(_valid(g), _let(pts, with_pts))
+        return F.when(_valid(gg), _let(pts, with_pts))
+
+    return let_once(g, body, transform_geom, from_crs, to_crs)

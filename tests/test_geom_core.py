@@ -275,3 +275,18 @@ def test_wkb_force_2d_and_collections():
     subs = list(gc_iter(rg.geom(0)))
     assert [s[0] for s in subs] == [0, 1]      # POINT, LINESTRING
     assert rg.geom(0)[4].tolist() == [1, 1 * GC_SHIFT + 1]
+
+
+def test_arrow_offsets_overflow_raises():
+    """A batch whose list offsets reach 2**31 must fail loudly in both
+    GEOM struct encoders instead of wrapping into corrupt int32 offsets
+    (fake offsets: nothing of that size is allocated)."""
+    from arctic_spark.functions.udfs import ragged_to_arrow
+    from arctic_spark.io import _ragged_to_arrow_struct
+    big = ragged.RaggedGeometry([ragged.LINESTRING], [0.0, 1.0], [0.0, 1.0],
+                                [0, 2**31], [2], [0, 1], [1], [0, 1])
+    for encode in (ragged_to_arrow, _ragged_to_arrow_struct):
+        with pytest.raises(OverflowError, match="int32 list offsets"):
+            encode(big)
+    edge = ragged.int32_offsets(np.array([0, 2**31 - 1], np.int64))
+    assert edge.dtype == np.int32 and edge[-1] == 2**31 - 1

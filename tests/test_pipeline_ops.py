@@ -408,3 +408,22 @@ def test_dsir_empty_docs_excluded(spark):
     assert {r.id for r in w} == {1}
     sel = pipeline.dsir_select(raw, target, k=5, buckets=32).collect()
     assert [r.id for r in sel] == [1]
+
+
+def test_dsir_select_release_frees_percount(spark):
+    """dsir_select carries the persisted per-doc count table of its
+    weights, so release() on the selection leaves no live pin."""
+    from arctic_spark.cache import pinned, release
+    raw = spark.createDataFrame(
+        [(i, "alpha beta" if i % 2 else "zulu xray") for i in range(8)],
+        "doc_id long, text string")
+    target = spark.createDataFrame(
+        [(9, "alpha beta alpha")], "doc_id long, text string")
+    sel = pipeline.dsir_select(raw, target, k=3, buckets=32)
+    handles = pinned(sel)
+    assert handles and all(h.is_cached for h in handles)
+    assert len(sel.collect()) == 3
+    assert release(sel) == len(handles)
+    assert pinned(sel) == []
+    assert not any(h.is_cached or h.storageLevel.useMemory
+                   or h.storageLevel.useDisk for h in handles)
