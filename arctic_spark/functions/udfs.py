@@ -1,7 +1,9 @@
 """Arrow-batched pandas UDFs for the operations that are genuinely
 iterative (convex hull, Douglas-Peucker, general pairwise predicates) or
 that cross the WKB interop boundary. Everything else stays native — see
-``native.py``.
+``native.py``. Each UDF hands the whole Arrow batch to one numpy kernel
+in ``geom``; convex hull and Douglas-Peucker are batch kernels, not
+per-row loops.
 
 Pandas UDFs receive the GEOM struct as a pandas.DataFrame of its fields
 and return one the same way (Spark's Arrow struct convention), so the
@@ -11,9 +13,12 @@ list columns themselves.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf, pandas_udf
@@ -250,11 +255,44 @@ def convex_hull(g: pd.DataFrame) -> pd.DataFrame:
     return ragged_to_pdf(algos.convex_hull(ragged_from_pdf(g)))
 
 
-def simplify(g, tolerance: float):
+def _simplify_batch(g: pd.DataFrame, tol) -> pd.DataFrame:
+    """Douglas-Peucker over one batch; ``tol`` is a number or one
+    tolerance per row. A NULL (NaN) tolerance gives a NULL geometry."""
+    rg = ragged_from_pdf(g)
+    t = np.broadcast_to(np.asarray(tol, dtype=np.float64), (len(rg),))
+    out = algos.simplify(rg, t)
+    out.gt[np.isnan(t)] = MISSING
+    return ragged_to_pdf(out)
+
+
+@pandas_udf(GEOM_TYPE)
+def simplify_udf(g: pd.DataFrame, tol: pd.Series) -> pd.DataFrame:
+    """Douglas-Peucker with one tolerance per row: SQL ``st_simplify``
+    and ``st.simplify`` with a Column tolerance."""
+    return _simplify_batch(g, tol.to_numpy(dtype=np.float64,
+                                           na_value=np.nan))
+
+
+@functools.lru_cache(maxsize=64)
+def _simplify_const(tolerance: float):
     @pandas_udf(GEOM_TYPE)
-    def _simplify(gg: pd.DataFrame) -> pd.DataFrame:
-        return ragged_to_pdf(algos.simplify(ragged_from_pdf(gg), tolerance))
-    return _simplify(g)
+    def _simplify(g: pd.DataFrame) -> pd.DataFrame:
+        return _simplify_batch(g, tolerance)
+    return _simplify
+
+
+def simplify(g, tolerance):
+    """Douglas-Peucker simplification of every ring and line part
+    (endpoints kept). ``tolerance`` is a number or a Column holding one
+    tolerance per row.
+
+    A number is bound into a one-argument UDF, built once per value:
+    Spark chains a Python UDF onto a Python-UDF input (``st.from_wkb``
+    of a GeoParquet read) only when it takes that input alone, so a
+    literal second argument would split the Python eval node in two."""
+    if isinstance(tolerance, Column):
+        return simplify_udf(g, tolerance.cast("double"))
+    return _simplify_const(float(tolerance))(g)
 
 
 @pandas_udf(GEOM_TYPE)
@@ -738,6 +776,44 @@ def ring_stats(g, xmin: float, ymin: float, xmax: float, ymax: float):
     return _stats(g)
 
 
+_PAD_BUDGET = 1 << 20   # elements in one zero-padded block (8 MB)
+
+
+def _pad_blocks(cnt, budget):
+    """Row-index groups for :func:`_row_seq_sums`: rows sorted by
+    ``cnt`` and cut so that rows x widest row stays within ``budget``
+    per group; a row wider than the budget is a group of its own."""
+    order = np.argsort(cnt, kind="stable")
+    c = cnt[order]
+    lo = 0
+    while lo < len(c):
+        # c ascends, so rows lo..hi-1 pad to (hi - lo) * c[hi - 1]
+        cost = np.arange(1, len(c) - lo + 1) * c[lo:]
+        hi = lo + max(int(np.searchsorted(cost, budget, side="right")), 1)
+        yield order[lo:hi]
+        lo = hi
+
+
+def _row_seq_sums(h, starts, cnt, budget=_PAD_BUDGET):
+    """Left-to-right sum of each run ``h[starts[r]:starts[r] + cnt[r]]``
+    (``cnt >= 1``), bit-identical to a sequential fold:
+    ``np.add.reduceat`` sums pairwise (bit-different), ``np.cumsum``
+    does not. Runs are scattered into zero-padded blocks and cumsum'ed
+    along axis 1 (trailing +0.0 terms cannot change a non-negative
+    partial sum). Blocks group rows of similar length under
+    ``budget`` elements, so one skewed row does not pad every row of
+    the batch to its length."""
+    out = np.empty(len(cnt))
+    for rows in _pad_blocks(cnt, budget):
+        c = cnt[rows]
+        col = np.arange(int(c.sum())) - np.repeat(np.cumsum(c) - c, c)
+        pad = np.zeros((len(rows), int(c.max())))
+        pad[np.repeat(np.arange(len(rows)), c), col] = \
+            h[np.repeat(starts[rows], c) + col]
+        out[rows] = np.cumsum(pad, axis=1)[np.arange(len(rows)), c - 1]
+    return out
+
+
 def line_ref_stats(line, q, interp_t: float, max_seg: float):
     """Fused linear-referencing battery (r13) — the geo_line_refs
     metric set in ONE Arrow exchange:
@@ -856,20 +932,8 @@ def line_ref_stats(line, q, interp_t: float, max_seg: float):
             hy = np.diff(full_y)
             h = np.sqrt(hx * hx + hy * hy)
             # per-row SEQUENTIAL sum matching _length_span's
-            # left-to-right fold: np.add.reduceat uses pairwise
-            # summation (bit-different), np.cumsum does not — scatter
-            # the within-row hypots into a zero-padded (m, maxc)
-            # matrix and cumsum along axis 1 (trailing +0.0 terms
-            # cannot change a non-negative partial sum)
-            cnt = row_tot - 1
-            rowid_h = np.repeat(np.arange(m), row_tot)[:-1]
-            within = np.ones(h.size, dtype=bool)
-            within[ends[:-1] - 1] = False
-            rows_w = rowid_h[within]
-            col = np.flatnonzero(within) - starts_r[rows_w]
-            pad = np.zeros((m, int(cnt.max())))
-            pad[rows_w, col] = h[within]
-            fo["seg_len"][rows] = np.cumsum(pad, axis=1)[rr, cnt - 1]
+            # left-to-right fold
+            fo["seg_len"][rows] = _row_seq_sums(h, starts_r, row_tot - 1)
             # --- reverse + interpolate 0 = the stored last vertex
             fo["rev_x"][rows] = X[:, -1]
             fo["rev_y"][rows] = Y[:, -1]

@@ -3,8 +3,11 @@
 These implement the reference's declared operator semantics
 (geopolars/geopolars-geo/src/geoseries.rs:10-181 trait docs) without GEOS:
 vectorized with ``np.add.reduceat`` over ring offsets where the math is
-data-parallel, small per-geometry loops where it is inherently sequential
-(convex hull, Douglas-Peucker).
+data-parallel. Convex hull and Douglas-Peucker work on the whole batch
+too: the hull sorts and deduplicates every row's points in one pass and
+runs only the monotone chain per row; Douglas-Peucker advances every
+open segment of the batch one recursion level per numpy pass. The
+per-geometry loops left are in the rarer operators below.
 
 Hot-path equivalents of most of these also exist as pure Catalyst
 expressions in ``arctic_spark.functions.native``; the numpy versions are
@@ -218,128 +221,149 @@ def centroid(rg: RaggedGeometry):
     return cx, cy
 
 
+def _chain(x, y):
+    """Andrew's monotone chain over distinct points sorted by (x, y),
+    given as sequences of floats: indices of the CCW hull vertices,
+    open (lower[:-1] + upper[:-1]). The turn test ``ax*by - ay*bx <= 0``
+    is the same IEEE arithmetic as ``np.cross`` on 2-vectors; ``<= 0``
+    drops collinear points, so all-collinear input gives the two
+    extremes."""
+    def half(order):
+        h = []
+        for k in order:
+            xk, yk = x[k], y[k]
+            while len(h) >= 2:
+                i, j = h[-2], h[-1]
+                xi, yi = x[i], y[i]
+                if (x[j] - xi) * (yk - yi) - (y[j] - yi) * (xk - xi) > 0:
+                    break
+                h.pop()
+            h.append(k)
+        return h
+    n = len(x)
+    return half(range(n))[:-1] + half(range(n - 1, -1, -1))[:-1]
+
+
 def convex_hull(rg: RaggedGeometry):
-    """Andrew's monotone chain per geometry. Returns RaggedGeometry of
+    """Convex hull of each geometry's vertices. Returns RaggedGeometry of
     Polygon/LineString/Point per the collapse rule the reference documents
     (geoseries.rs:26-31: 'smallest convex Polygon ... unless fewer than 3
-    points, then a Linestring or Point')."""
-    gts, oxs, oys, orings, oparts = [], [], [], [], []
-    for i in range(len(rg)):
-        g, xs, ys, _, _ = rg.geom(i)
-        if g == MISSING:
-            gts.append(None)
-            oxs.append(None)
-            oys.append(None)
-            orings.append(None)
-            oparts.append(None)
-            continue
-        pts = np.unique(np.column_stack([xs, ys]), axis=0)
-        n = len(pts)
-        if n == 0:
-            gts.append(POINT)
-            oxs.append([])
-            oys.append([])
-            orings.append([])
-            oparts.append([])
-            continue
-        if n == 1:
-            gts.append(POINT)
-            oxs.append([pts[0, 0]])
-            oys.append([pts[0, 1]])
-            orings.append([1])
-            oparts.append([1])
-            continue
-        # sort lexicographically (unique already sorts)
-        def half(points):
-            h = []
-            for p in points:
-                while len(h) >= 2 and np.cross(h[-1] - h[-2], p - h[-2]) <= 0:
-                    h.pop()
-                h.append(p)
-            return h
-        lower = half(pts)
-        upper = half(pts[::-1])
-        hull = np.array(lower[:-1] + upper[:-1])
-        if len(hull) == 2 or n == 2:
-            gts.append(LINESTRING)
-            oxs.append(hull[:, 0].tolist() if len(hull) == 2 else pts[:, 0].tolist())
-            oys.append(hull[:, 1].tolist() if len(hull) == 2 else pts[:, 1].tolist())
-            orings.append([2])
-            oparts.append([1])
-            continue
-        if len(hull) < 3:
-            gts.append(LINESTRING)
-            oxs.append(pts[:2, 0].tolist())
-            oys.append(pts[:2, 1].tolist())
-            orings.append([2])
-            oparts.append([1])
-            continue
-        # close ring, CCW orientation (monotone chain lower+upper is CCW)
-        hx = np.append(hull[:, 0], hull[0, 0])
-        hy = np.append(hull[:, 1], hull[0, 1])
-        gts.append(POLYGON)
-        oxs.append(hx.tolist())
-        oys.append(hy.tolist())
-        orings.append([len(hx)])
-        oparts.append([1])
-    return RaggedGeometry.from_pylists(gts, oxs, oys, orings, oparts)
+    points, then a Linestring or Point'); an EMPTY row gives POINT EMPTY.
 
-
-def _dp_mask(x, y, tol):
-    """Douglas-Peucker keep-mask for one open/closed coordinate run."""
-    n = len(x)
-    keep = np.zeros(n, dtype=bool)
-    keep[0] = keep[n - 1] = True
-    stack = [(0, n - 1)]
-    while stack:
-        i0, i1 = stack.pop()
-        if i1 <= i0 + 1:
-            continue
-        ax, ay, bx, by = x[i0], y[i0], x[i1], y[i1]
-        dx, dy = bx - ax, by - ay
-        seg2 = dx * dx + dy * dy
-        px = x[i0 + 1:i1]
-        py = y[i0 + 1:i1]
-        if seg2 == 0:
-            d2 = (px - ax) ** 2 + (py - ay) ** 2
+    One lexsort orders the points of every row by (row, x, y) and a
+    neighbour compare drops duplicates, for the whole batch at once;
+    only the monotone chain itself (:func:`_chain`) runs per row. The
+    polygon ring is CCW and closed."""
+    n = len(rg)
+    row = np.repeat(np.arange(n), np.diff(rg.coord_offsets))
+    order = np.lexsort((rg.ys, rg.xs, row))
+    sx, sy, srow = rg.xs[order], rg.ys[order], row[order]
+    new = np.ones(len(sx), dtype=bool)
+    new[1:] = ((sx[1:] != sx[:-1]) | (sy[1:] != sy[:-1])
+               | (srow[1:] != srow[:-1]))
+    uoff = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(np.bincount(srow[new], minlength=n), out=uoff[1:])
+    uoff = uoff.tolist()
+    ux, uy = sx[new].tolist(), sy[new].tolist()
+    gt = np.where(rg.gt == MISSING, MISSING, POINT).astype(np.int8)
+    ox, oy, rings = [], [], []
+    count = np.zeros(n, dtype=np.int64)     # output coords per row
+    for i in np.flatnonzero(gt != MISSING).tolist():
+        a, b = uoff[i], uoff[i + 1]
+        if b == a:
+            continue                        # EMPTY -> POINT EMPTY
+        x, y = ux[a:b], uy[a:b]
+        if b - a == 1:
+            hx, hy = x, y
         else:
-            cross = (px - ax) * dy - (py - ay) * dx
-            d2 = cross * cross / seg2
-        k = int(np.argmax(d2))
-        if d2[k] > tol * tol:
-            idx = i0 + 1 + k
-            keep[idx] = True
-            stack.append((i0, idx))
-            stack.append((idx, i1))
-    return keep
+            hull = _chain(x, y)
+            if len(hull) >= 3:
+                hull.append(hull[0])
+                gt[i] = POLYGON
+            else:
+                gt[i] = LINESTRING
+            hx = [x[k] for k in hull]
+            hy = [y[k] for k in hull]
+        ox += hx
+        oy += hy
+        rings.append(len(hx))
+        count[i] = len(hx)
+    coord_off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(count, out=coord_off[1:])
+    ring_off = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(count > 0, out=ring_off[1:])
+    return RaggedGeometry(gt, np.array(ox, dtype=np.float64),
+                          np.array(oy, dtype=np.float64), coord_off,
+                          np.array(rings, dtype=np.int32), ring_off,
+                          np.ones(len(rings), dtype=np.int32),
+                          ring_off.copy())
+
+
+def _spans(starts, counts):
+    """Flat indices of the runs ``[starts[k], starts[k] + counts[k])``."""
+    first = np.cumsum(counts) - counts
+    return np.repeat(starts - first, counts) + np.arange(int(counts.sum()))
 
 
 def simplify(rg: RaggedGeometry, tol):
-    """Douglas-Peucker per ring (endpoints preserved, matching the
-    reference doc geoseries.rs:109-115)."""
-    gts, oxs, oys, orings, oparts = [], [], [], [], []
-    for i in range(len(rg)):
-        g, xs, ys, rings, parts = rg.geom(i)
-        if g == MISSING:
-            gts.append(None); oxs.append(None); oys.append(None)
-            orings.append(None); oparts.append(None)
-            continue
-        if g in (POINT, MULTIPOINT) or len(xs) == 0:
-            gts.append(int(g)); oxs.append(xs.tolist()); oys.append(ys.tolist())
-            orings.append(rings.tolist()); oparts.append(parts.tolist())
-            continue
-        nx, ny, nr = [], [], []
-        off = 0
-        for rl in rings:
-            x, y = xs[off:off + rl], ys[off:off + rl]
-            m = _dp_mask(x, y, tol)
-            nx.extend(x[m].tolist())
-            ny.extend(y[m].tolist())
-            nr.append(int(m.sum()))
-            off += rl
-        gts.append(int(g)); oxs.append(nx); oys.append(ny)
-        orings.append(nr); oparts.append(parts.tolist())
-    return RaggedGeometry.from_pylists(gts, oxs, oys, orings, oparts)
+    """Douglas-Peucker per ring / line part (endpoints preserved,
+    matching the reference doc geoseries.rs:109-115); points,
+    multipoints and EMPTY rows pass through. ``tol`` is a scalar or one
+    tolerance per row.
+
+    Batch form: each numpy pass advances every open segment of every
+    ring in the batch by one recursion level. A segment keeps its
+    farthest interior point (the first one on ties) and splits there
+    when that point's squared distance to the chord, ``cross*cross /
+    seg2`` (squared distance to the start when ``seg2 == 0``), exceeds
+    ``tol*tol``."""
+    n = len(rg)
+    tol = np.asarray(tol, dtype=np.float64)
+    tol2 = np.broadcast_to(tol * tol, (n,))
+    xs, ys = rg.xs, rg.ys
+    lens = rg.rings.astype(np.int64)
+    ring_row = np.repeat(np.arange(n), np.diff(rg.ring_offsets))
+    rgt = rg.gt[ring_row]
+    dp = (rgt != POINT) & (rgt != MULTIPOINT) & (lens >= 3)
+    starts = _ring_starts(rg)
+    a = starts[dp]
+    b = a + lens[dp] - 1
+    t2 = tol2[ring_row[dp]]
+    keep = np.ones(len(xs), dtype=bool)
+    keep[_spans(a + 1, b - a - 1)] = False
+    while len(a):
+        m = b - a - 1
+        idx = _spans(a + 1, m)
+        seg = np.repeat(np.arange(len(a)), m)
+        ax, ay = xs[a], ys[a]
+        dx, dy = xs[b] - ax, ys[b] - ay
+        seg2 = dx * dx + dy * dy
+        px, py = xs[idx], ys[idx]
+        sax, say, s2 = ax[seg], ay[seg], seg2[seg]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cross = (px - sax) * dy[seg] - (py - say) * dx[seg]
+            d2 = np.where(s2 == 0, (px - sax) ** 2 + (py - say) ** 2,
+                          cross * cross / s2)
+        mx = np.maximum.reduceat(d2, np.cumsum(m) - m)
+        split = mx > t2
+        hit = np.flatnonzero((d2 == mx[seg]) & split[seg])
+        hseg = seg[hit]
+        first = np.ones(len(hit), dtype=bool)
+        first[1:] = hseg[1:] != hseg[:-1]
+        k = idx[hit[first]]
+        keep[k] = True
+        a = np.concatenate([a[split], k])
+        b = np.concatenate([k, b[split]])
+        t2 = np.concatenate([t2[split], t2[split]])
+        more = b - a >= 2
+        a, b, t2 = a[more], b[more], t2[more]
+    kept = np.zeros(len(xs) + 1, dtype=np.int64)
+    np.cumsum(keep, out=kept[1:])
+    rings = (kept[starts + lens] - kept[starts]).astype(np.int32)
+    return RaggedGeometry(rg.gt.copy(), xs[keep], ys[keep],
+                          kept[rg.coord_offsets], rings,
+                          rg.ring_offsets.copy(), rg.parts.copy(),
+                          rg.part_offsets.copy())
 
 
 # ---------------------------------------------------------------------------
@@ -1566,29 +1590,20 @@ def equals_pair(g1, g2):
 # ragged-in / ragged-out convention.
 # ---------------------------------------------------------------------------
 
-def _hull_points(xs, ys):
-    """Convex hull vertex array (CCW, no closing repeat) of a point set —
-    monotone chain over unique points. Returns (k,2) array; k may be 1
-    (degenerate point) or 2 (collinear)."""
-    pts = np.unique(np.column_stack([xs, ys]), axis=0)
-    n = len(pts)
-    if n <= 2:
-        return pts
-
-    def half(points):
-        h = []
-        for p in points:
-            while len(h) >= 2 and np.cross(h[-1] - h[-2], p - h[-2]) <= 0:
-                h.pop()
-            h.append(p)
-        return h
-
-    lower = half(pts)
-    upper = half(pts[::-1])
-    hull = np.array(lower[:-1] + upper[:-1])
-    if len(hull) < 3:
-        return pts[:2] if n >= 2 else pts
-    return hull
+def _hull_vertices(rg: RaggedGeometry):
+    """Per-row convex hull vertices from the batch :func:`convex_hull`,
+    as (k, 2) arrays, CCW and open: k = 1 for a single distinct point, 2
+    (the extremes) for collinear points. None for MISSING and EMPTY
+    rows."""
+    h = convex_hull(rg)
+    pts = np.column_stack([h.xs, h.ys])
+    co = h.coord_offsets.tolist()
+    closed = (h.gt == POLYGON).tolist()
+    out = []
+    for i in range(len(h)):
+        c0, c1 = co[i], co[i + 1] - closed[i]
+        out.append(pts[c0:c1] if c1 > c0 else None)
+    return out
 
 
 def minimum_clearance(rg: RaggedGeometry):
@@ -1673,17 +1688,15 @@ def minimum_rotated_rectangle(rg: RaggedGeometry):
     never allocates more than a few MB."""
     gts, oxs, oys, orings, oparts = [], [], [], [], []
     batch_rows = []          # (out_idx, hull ndarray) for k >= 3
-    for i in range(len(rg)):
-        g, xs, ys, _, _ = rg.geom(i)
-        if g == MISSING:
+    for i, hull in enumerate(_hull_vertices(rg)):
+        if rg.gt[i] == MISSING:
             gts.append(None); oxs.append(None); oys.append(None)
             orings.append(None); oparts.append(None)
             continue
-        if len(xs) == 0:
+        if hull is None:
             gts.append(POLYGON); oxs.append([]); oys.append([])
             orings.append([]); oparts.append([])
             continue
-        hull = _hull_points(np.asarray(xs, float), np.asarray(ys, float))
         if len(hull) == 1:
             gts.append(POINT); oxs.append([hull[0, 0]])
             oys.append([hull[0, 1]]); orings.append([1]); oparts.append([1])
@@ -1801,11 +1814,9 @@ def minimum_bounding_circle_params(rg: RaggedGeometry):
     cys = np.full(n, np.nan)
     rs = np.full(n, np.nan)
     small = []
-    for i in range(n):
-        g, xs, ys, _, _ = rg.geom(i)
-        if g == MISSING or len(xs) == 0:
+    for i, hull in enumerate(_hull_vertices(rg)):
+        if hull is None:
             continue
-        hull = _hull_points(np.asarray(xs, float), np.asarray(ys, float))
         if len(hull) > 12:
             cxs[i], cys[i], rs[i] = _welzl_msw(hull)
         else:
@@ -2114,20 +2125,6 @@ def delaunay_triangles(rg: RaggedGeometry):
     return RaggedGeometry.from_pylists(gts, oxs, oys, orings, oparts)
 
 
-def _monotone_chain(pts):
-    """CCW convex hull vertices (open) of a unique-sorted (n,2) array."""
-    def half(points):
-        h = []
-        for p in points:
-            while len(h) >= 2 and np.cross(h[-1] - h[-2], p - h[-2]) <= 0:
-                h.pop()
-            h.append(p)
-        return h
-    lower = half(pts)
-    upper = half(pts[::-1])
-    return np.array(lower[:-1] + upper[:-1])
-
-
 def concave_hull(rg: RaggedGeometry, ratio: float = 0.0,
                  max_edge_length: float | None = None):
     """Concave hull of each geometry's unique vertices (GeoPandas 1.0 /
@@ -2246,7 +2243,7 @@ def concave_hull(rg: RaggedGeometry, ratio: float = 0.0,
         # near-degenerate sliver triangulation (found by hypothesis) can
         # break the boundary trace — fall back to the monotone-chain
         # hull, the conservative superset.
-        hull = _monotone_chain(pts)
+        hull = pts[_chain(pts[:, 0].tolist(), pts[:, 1].tolist())]
         hull_area2 = abs(sum(
             hull[j][0] * hull[(j + 1) % len(hull)][1]
             - hull[(j + 1) % len(hull)][0] * hull[j][1]

@@ -176,49 +176,3 @@ def dimension_stats(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
         "dim", "n",
         (s1 / nn).alias("mean"),
         ((s2 - s1 * s1 / nn) / (nn - 1)).alias("var"))
-
-
-def srp_matrix(dim: int, out_dim: int, seed: str = "srp", s: int = 3):
-    """Deterministic very-sparse random projection matrix (Achlioptas
-    2003 "Database-friendly random projections"; Li, Hastie & Church
-    2006 "Very sparse random projections"): entries √s·{+1, 0, −1}
-    with probabilities {1/2s, 1−1/s, 1/2s}, derived from
-    md5("k:j:seed") — the engine's portable hash primitive, so any SQL
-    oracle regenerates the identical matrix. Returns ``out_dim`` rows
-    of ``dim`` floats (plain lists — broadcastable literals)."""
-    import hashlib
-    import math
-    rt = math.sqrt(float(s))
-    M = []
-    for k in range(out_dim):
-        row = []
-        for j in range(dim):
-            h = int(hashlib.md5(f"{k}:{j}:{seed}".encode("utf-8"))
-                    .hexdigest()[:8], 16)
-            b = h % (2 * s)
-            row.append(rt if b == 0 else (-rt if b == 1 else 0.0))
-        M.append(row)
-    return M
-
-
-def srp_project(vec, matrix, scale: bool = True):
-    """array<double> Column: x ↦ (1/√out_dim)·M·x — the
-    Johnson–Lindenstrauss-preserving dimensionality reduction used to
-    cheapen downstream ANN/dedup over embeddings (project once, run
-    LSH/IVF/cosine in the small space). Fully native: one
-    zip_with+fold per output dimension, the matrix rows riding the
-    plan as literals; zero Python, zero shuffle — a pure projection
-    that scales linearly with the corpus."""
-    import math
-    out_dim = len(matrix)
-    inv = F.lit(1.0 / math.sqrt(float(out_dim)))
-
-    def comp(row):
-        acc = F.aggregate(
-            F.zip_with(_c(vec),
-                       F.array(*[F.lit(float(w)) for w in row]),
-                       lambda x, w: x.cast("double") * w),
-            F.lit(0.0), lambda a, v: a + v)
-        return acc * inv if scale else acc
-
-    return F.array(*[comp(r) for r in matrix])

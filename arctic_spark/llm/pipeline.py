@@ -282,10 +282,6 @@ def ipv4_count(text) -> Column:
     return F.size(F.regexp_extract_all(_c(text), F.lit(_IPV4_RE), F.lit(0)))
 
 
-def phone_count(text) -> Column:
-    return F.size(F.regexp_extract_all(_c(text), F.lit(_PHONE_RE), F.lit(0)))
-
-
 def redact_pii(text, email_token="<EMAIL>", ip_token="<IP>",
                phone=False, phone_token="<PHONE>") -> Column:
     """Replace emails / IPv4s (and optionally phone-shaped numbers) with

@@ -584,15 +584,6 @@ def _vec_dist2(sub, centroid):
         F.lit(0.0), lambda acc, v: acc + v)
 
 
-def _subvec_dist2(vec, j, dsub, centroid):
-    """Squared L2 between vec[j*dsub:(j+1)*dsub] and a literal
-    centroid. Callers scoring MANY centroids against the same
-    subspace should slice once and use :func:`_vec_dist2` (pq_encode
-    and pq_lut do — the r7 shape re-sliced per centroid, 16 slices
-    per subspace per row)."""
-    return _vec_dist2(F.slice(_c(vec), j * dsub + 1, dsub), centroid)
-
-
 def pq_encode(vec, codebooks) -> Column:
     """array<int> of the m nearest-centroid code ids — fully native
     (per-centroid squared distances per subspace, argmin via array_sort

@@ -62,14 +62,6 @@ def punct_ratio(text) -> Column:
     return F.when(total > 0, punct.cast("double") / total).otherwise(0.0)
 
 
-def uppercase_ratio(text) -> Column:
-    t = _c(text)
-    upper = sum((char_count(t, c) for c in "ABCDEFGHIJKLMNOPQRSTUVWXYZ"),
-                F.lit(0))
-    total = F.length(t)
-    return F.when(total > 0, upper.cast("double") / total).otherwise(0.0)
-
-
 def mean_word_length(text) -> Column:
     toks = word_tokens(text)
     n = F.size(toks)

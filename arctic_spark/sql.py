@@ -39,6 +39,21 @@ def _geom_udf(fn):
     return f
 
 
+def _batch_param(values: pd.Series, fn: str, default):
+    """The single value a scalar parameter of ``fn`` takes in this
+    batch. The kernels behind these functions take one parameter per
+    call, so a parameter that varies between rows is refused rather
+    than silently applied from the first row."""
+    if not len(values):
+        return default
+    if values.nunique(dropna=False) > 1:
+        raise ValueError(
+            f"{fn}: the parameter must be the same for every row of a "
+            f"batch; got {values.drop_duplicates().head(3).tolist()}; "
+            "pass a literal")
+    return values.iloc[0]
+
+
 def _pair_geom_udf(op):
     """Row-aligned boolean overlay op (geom/boolean.py) for SQL users —
     full round-4/5 surface: general polygons + GEOS dimension rules."""
@@ -122,22 +137,17 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
 
     @pandas_udf(GEOM_TYPE)
     def st_buffer(g: pd.DataFrame, dist: pd.Series) -> pd.DataFrame:
-        d = float(dist.iloc[0]) if len(dist) else 0.0
+        d = float(_batch_param(dist, "st_buffer", 0.0))
         return ragged_to_pdf(algos.buffer(ragged_from_pdf(g), d))
 
     @pandas_udf(GEOM_TYPE)
-    def st_simplify(g: pd.DataFrame, tol: pd.Series) -> pd.DataFrame:
-        t = float(tol.iloc[0]) if len(tol) else 0.0
-        return ragged_to_pdf(algos.simplify(ragged_from_pdf(g), t))
-
-    @pandas_udf(GEOM_TYPE)
     def st_subdivide(g: pd.DataFrame, mv: pd.Series) -> pd.DataFrame:
-        m = int(mv.iloc[0]) if len(mv) else 128
+        m = int(_batch_param(mv, "st_subdivide", 128))
         return ragged_to_pdf(algos.subdivide(ragged_from_pdf(g), m))
 
     @pandas_udf(GEOM_TYPE)
     def st_offsetcurve(g: pd.DataFrame, dist: pd.Series) -> pd.DataFrame:
-        d = float(dist.iloc[0]) if len(dist) else 0.0
+        d = float(_batch_param(dist, "st_offsetcurve", 0.0))
         return ragged_to_pdf(algos.offset_curve(ragged_from_pdf(g), d))
 
     @pandas_udf(GEOM_TYPE)
@@ -147,7 +157,8 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
         from .geom.ragged import (GEOMETRYCOLLECTION, LINESTRING,
                                   MULTILINESTRING, MULTIPOINT,
                                   MULTIPOLYGON, POINT, POLYGON, gc_iter)
-        sub = {0: POINT, 1: LINESTRING, 2: POLYGON}[int(dim.iloc[0])]
+        sub = {0: POINT, 1: LINESTRING, 2: POLYGON}[
+            int(_batch_param(dim, "st_collectionextract", 2))]
         multi = {POINT: MULTIPOINT, LINESTRING: MULTILINESTRING,
                  POLYGON: MULTIPOLYGON}[sub]
         rg = ragged_from_pdf(g)
@@ -180,7 +191,7 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
     @pandas_udf(GEOM_TYPE)
     def st_snap(g1: pd.DataFrame, g2: pd.DataFrame,
                 tol: pd.Series) -> pd.DataFrame:
-        t = float(tol.iloc[0]) if len(tol) else 0.0
+        t = float(_batch_param(tol, "st_snap", 0.0))
         return ragged_to_pdf(algos.snap(ragged_from_pdf(g1),
                                         ragged_from_pdf(g2), t))
 
@@ -354,7 +365,7 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
         """Same bit walk as the native st.geohash (python replica for
         the SQL surface)."""
         b32 = "0123456789bcdefghjkmnpqrstuvwxyz"
-        p = int(prec.iloc[0]) if len(prec) else 12
+        p = int(_batch_param(prec, "st_geohash", 12))
         nbits = 5 * p
         nlon = (nbits + 1) // 2
         nlat = nbits // 2
@@ -409,7 +420,7 @@ def register_sql_functions(spark: SparkSession) -> list[str]:
         "st_geomfromgeojson": st_geomfromgeojson,
         "st_distance": st_distance,
         "st_buffer": st_buffer,
-        "st_simplify": st_simplify,
+        "st_simplify": _udfs.simplify_udf,
         "st_relate": _udfs.relate,
         # round-6 shape descriptors
         "st_hausdorffdistance": _udfs.hausdorff_distance,
